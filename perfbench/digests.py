@@ -30,23 +30,21 @@ def _import_root() -> None:
         sys.path.insert(0, ROOT)
 
 
-#: the query_mix rows: TPC-H Q1 and MinHash dedup from HEADLINE, and
-#: the EXTENDED rows with the heaviest build (winnowing, shard packing,
-#: stats) and execution (stats with perplexity, language ID). A warm-up
-#: pass and two timed passes of all 26 rows take over two minutes on a
-#: 4-core host, more than one run of the benchmark's time budget holds.
+#: the query_mix rows: at least one per operator family, chosen from
+#: warm per-row times at QUERY_MIX_SCALE on a 4-core host (CHANGES.md).
+#: A warm-up pass and two timed passes of all 26 bench.py rows take about
+#: two minutes there, more than one run of the benchmark's time budget
+#: holds; these eight are 45% of a warm 26-row pass.
 QUERY_MIX = [
-    "q01_pricing_summary", "q_minhash_lsh", "q_fingerprint_winnowing",
-    "q_shard_packing", "q_stats_summary", "q_lang_predict",
+    "q01_pricing_summary",      # scan and aggregate (TPC-H Q1)
+    "q05_local_supplier",       # six-table join
+    "q_asof_purchase",          # as-of join and windows
+    "q_minhash_lsh",            # text dedup: MinHash LSH
+    "q_fingerprint_winnowing",  # text dedup and contamination; heaviest row
+    "q_shard_packing",          # Spark jobs launched during build
+    "q_pq_topk",                # vector search: IVF-PQ top-k
+    "q_semantic_dedup",         # vector dedup and decontamination
 ]
-
-
-def query_names() -> list[str]:
-    """The 26 bench.py rows: 19 HEADLINE then 7 EXTENDED."""
-    _import_root()
-    import bench
-
-    return list(bench.HEADLINE) + list(bench.EXTENDED)
 
 
 def digest(pdf) -> str:
@@ -90,7 +88,7 @@ def main() -> int:
     with tempfile.TemporaryDirectory(dir=ROOT, prefix=".perfbench-digests-") as d:
         gen.write_tables(gen.star_tables(gen.QUERY_MIX_DATA_SEED,
                                          QUERY_MIX_SCALE), d)
-        out = oracle_digests(d, query_names())
+        out = oracle_digests(d, QUERY_MIX)
     with open(DIGESTS_PATH, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
         f.write("\n")

@@ -196,87 +196,86 @@ def write_tables(tables: dict[str, pa.Table], out_dir: str) -> None:
 
 # -- lake: events ------------------------------------------------------------
 
+EVENTS_PER_NIGHT = 400
+#: share of a night's batch that replays rows landed the night before
+REPLAY_SHARE = 0.10
+#: share of the landed events whose ``value`` gets a late correction
+UPDATE_SHARE = 0.02
 
-def ingest_plan(seed: int, nights: int, events_per_night: int = 400,
-                replay_share: float = 0.10, update_share: float = 0.02) -> dict:
-    """A nightly ``events`` history. Night 0 seeds the dataset; each later
-    night carries one day of new events plus ~``replay_share`` replayed
-    rows from earlier nights (``batches``), and late corrections of the
-    ``value`` of ~``update_share`` of the events already landed
-    (``updates``). ``expected[n]`` holds the generator-side invariants
-    once night ``n`` has landed; ``survivors`` is the final state."""
+
+def ingest_plan(seed: int) -> dict:
+    """A two-night ``events`` history. Night 0 seeds the dataset
+    (``initial``). Night 1 carries one day of new events plus
+    ~``REPLAY_SHARE`` replayed night-0 rows (``batch``), and late
+    corrections of the ``value`` of ~``UPDATE_SHARE`` of the night-0
+    events (``updates``). ``expected`` holds the generator-side
+    invariants once night 1 has landed; ``survivors`` is that state."""
     r = _rng(seed, "ingest")
-    batches, updates, expected = [], [], []
-    landed: list[pa.Table] = []
-    value: dict[int, float] = {}
-    next_id = 0
-    for night in range(nights + 1):
-        fresh = events_table(seed, next_id, events_per_night,
-                             dt.datetime(2024, 1, 1) + dt.timedelta(days=night), 1)
-        next_id += events_per_night
-        batch, upd = fresh, None
-        if landed:
-            prior = pa.concat_tables(landed)
-            n_replay = int(round(replay_share * events_per_night))
-            pick = np.sort(r.choice(prior.num_rows, n_replay, replace=False))
-            batch = pa.concat_tables([prior.take(pick), fresh])
-            n_up = max(1, int(round(update_share * prior.num_rows)))
-            pick = np.sort(r.choice(prior.num_rows, n_up, replace=False))
-            upd = prior.take(pick)
-            upd = upd.set_column(upd.schema.get_field_index("value"), "value",
-                                 pa.array(_money(r, 0.01, 500.0, n_up)))
-        landed.append(fresh)
-        for t in (fresh, upd):
-            if t is not None:
-                value.update(zip(t.column("event_id").to_pylist(),
-                                 t.column("value").to_pylist()))
-        batches.append(batch)
-        updates.append(upd)
-        expected.append({
-            "events": next_id,
-            "value_cents": sum(round(v * 100) for v in value.values()),
-        })
-    final = pa.concat_tables(landed)
-    final = final.set_column(
-        final.schema.get_field_index("value"), "value",
-        pa.array([value[i] for i in final.column("event_id").to_pylist()]))
-    return {"batches": batches, "updates": updates, "expected": expected,
-            "survivors": final}
+    n = EVENTS_PER_NIGHT
+    day0 = dt.datetime(2024, 1, 1)
+    initial = events_table(seed, 0, n, day0, 1)
+    fresh = events_table(seed, n, n, day0 + dt.timedelta(days=1), 1)
+    replay = initial.take(np.sort(
+        r.choice(n, int(round(REPLAY_SHARE * n)), replace=False)))
+    pick = np.sort(r.choice(n, max(1, int(round(UPDATE_SHARE * n))), replace=False))
+    value_at = initial.schema.get_field_index("value")
+    updates = initial.take(pick)
+    updates = updates.set_column(value_at, "value",
+                                 pa.array(_money(r, 0.01, 500.0, len(pick))))
+    final = pa.concat_tables([initial, fresh])
+    value = final.column("value").to_pylist()
+    for i, v in zip(pick, updates.column("value").to_pylist()):
+        value[i] = v  # event ids are row positions
+    final = final.set_column(value_at, "value", pa.array(value))
+    return {
+        "initial": initial,
+        "batch": pa.concat_tables([replay, fresh]),
+        "updates": updates,
+        "expected": {"events": 2 * n,
+                     "value_cents": sum(round(v * 100) for v in value)},
+        "survivors": final,
+    }
 
 
 # -- lake: documents ---------------------------------------------------------
 
+N_DUMPS = 2
+DOCS_PER_DUMP = 150
+DOCS_PER_APPEND = 40
+N_EVAL = 12
+#: share of a batch that copies documents of the other dump
+DUP_SHARE = 0.05
+#: share of a batch that carries an eval text
+CONTAM_SHARE = 0.03
 
-def sweep_plan(seed: int, nights: int, n_dumps: int = 2,
-               docs_per_dump: int = 150, docs_per_append: int = 40,
-               n_eval: int = 12, dup_share: float = 0.05,
-               contam_share: float = 0.03) -> dict:
-    """Documents split into ``n_dumps`` crawl dumps. Every batch (the
-    initial load and each night's appends to a seeded subset of dumps)
-    carries planted verbatim copies of documents already in ANOTHER
-    dump (cross-dump near-dups) and planted copies of held-out eval
-    texts (contamination). ``planted_dups`` maps a copy's
-    ``(dump, doc_id)`` to its source ``(dump, doc_id)``;
+
+def sweep_plan(seed: int) -> dict:
+    """Documents split into ``N_DUMPS`` crawl dumps: an initial load of
+    every dump and one night's appends to one seeded dump, the other
+    staying unchanged. Every batch carries planted verbatim copies of
+    documents already in ANOTHER dump (cross-dump near-dups) and planted
+    copies of held-out eval texts (contamination). ``planted_dups`` maps
+    a copy's ``(dump, doc_id)`` to its source ``(dump, doc_id)``;
     ``planted_contam`` lists ``(dump, doc_id)`` of contaminated docs."""
     r = _rng(seed, "sweep")
-    eval_texts = _texts(r, n_eval, 40, 80)
+    eval_texts = _texts(r, N_EVAL, 40, 80)
     eval_set = pa.table({
-        "doc_id": pa.array(np.arange(n_eval), pa.int64()),
+        "doc_id": pa.array(np.arange(N_EVAL), pa.int64()),
         "text": eval_texts,
     })
-    dumps = [f"dump{i}" for i in range(n_dumps)]
+    dumps = [f"dump{i}" for i in range(N_DUMPS)]
     pool: list[tuple[str, int, str]] = []  # (dump, id, text) landed so far
     planted_dups: dict[tuple[str, int], tuple[str, int]] = {}
     planted_contam: list[tuple[str, int]] = []
-    next_id = [d * 1_000_000 for d in range(n_dumps)]
+    next_id = [d * 1_000_000 for d in range(N_DUMPS)]
 
     def batch(d: int, n: int) -> pa.Table:
         ids = list(range(next_id[d], next_id[d] + n))
         next_id[d] += n
         texts = _texts(r, n, 20, 100)
         others = [p for p in pool if p[0] != dumps[d]]
-        n_dup = max(1, int(round(dup_share * n))) if others else 0
-        slots = r.choice(n, n_dup + max(1, int(round(contam_share * n))),
+        n_dup = max(1, int(round(DUP_SHARE * n))) if others else 0
+        slots = r.choice(n, n_dup + max(1, int(round(CONTAM_SHARE * n))),
                          replace=False)
         for j, slot in enumerate(slots):
             if j < n_dup:
@@ -284,18 +283,15 @@ def sweep_plan(seed: int, nights: int, n_dumps: int = 2,
                 texts[slot] = src[2]
                 planted_dups[(dumps[d], ids[slot])] = (src[0], src[1])
             else:
-                ev = eval_texts[int(r.integers(0, n_eval))]
+                ev = eval_texts[int(r.integers(0, N_EVAL))]
                 texts[slot] = f"{texts[slot]} {ev}"
                 planted_contam.append((dumps[d], ids[slot]))
         pool.extend((dumps[d], i, s) for i, s in zip(ids, texts))
         return docs_table(r, ids, texts)
 
-    initial = {dumps[d]: batch(d, docs_per_dump) for d in range(n_dumps)}
-    appends = []
-    for _night in range(nights):
-        k = int(r.integers(1, n_dumps))  # some dumps stay unchanged each night
-        chosen = sorted(r.choice(n_dumps, k, replace=False).tolist())
-        appends.append({dumps[d]: batch(d, docs_per_append) for d in chosen})
-    return {"dumps": dumps, "initial": initial, "appends": appends,
+    initial = {dumps[d]: batch(d, DOCS_PER_DUMP) for d in range(N_DUMPS)}
+    changed = int(r.integers(0, N_DUMPS))
+    return {"dumps": dumps, "initial": initial,
+            "appends": {dumps[changed]: batch(changed, DOCS_PER_APPEND)},
             "eval_set": eval_set, "planted_dups": planted_dups,
             "planted_contam": planted_contam}

@@ -10,19 +10,20 @@ client drives the package through its public calls on
 ``local[<cpus>]``, closed loop. After set-up (session start, input
 staging, the workload's untimed warm-up) the workload's fixed operation
 sequence repeats until ``--seconds`` have passed, at least ``REPS``
-times (query_mix 2, lake 1); ``run_cpu_s`` and ``run_s`` are medians
+times (query_mix 2, lake 1); ``run_s`` and ``run_cpu_s`` are medians
 over repetitions. Each workload's minimum takes longer than ten seconds
 on a 4-core host, so a ten-second run makes exactly that many.
 
 ``--trace 0`` reports the end-to-end metrics (``END_TO_END``).
 ``--trace 1`` runs the same sequence with spans recorded around every
-public call and reports the per-layer metrics (``PER_LAYER``). Its
-``trace.run_s`` minus an untraced run's ``run_s`` (in that run's detail
-record) on the same seed is the tracing overhead; ``trace.overhead_s``
+public call and reports the per-layer metrics (``PER_LAYER``), each for
+one repetition. Its ``trace.run_s`` minus an untraced run's ``run_s`` on
+the same seed is the tracing overhead; ``trace.overhead_s``
 is the time the tracer spent in its own bookkeeping. The spans of a
 traced run are written to ``.perfbench/spans-<workload>-s<seed>.json``.
 Every run also writes a detail record (host fingerprint, loadavg at
-start and end, set-up parts, wall ``run_s``, peak resident memory of
+start and end, the host's CPU steal share during the timed part, set-up
+parts, every repetition's ``run_s``, peak resident memory of
 this process and the JVM, every operation's latency, their median and
 tail with the tail percentile's name and sample count, failures) to
 ``.perfbench/detail-<workload>-s<seed>.json`` and prints it on the line
@@ -50,17 +51,20 @@ ROOT = os.path.dirname(HERE)
 
 WORKLOADS = ("query_mix", "lake")
 
-#: end-to-end metrics of an untraced run: name -> unit. ``run_cpu_s`` is
-#: the CPU time (this process, the JVM and its Python workers) of the
-#: timed operations, median over repetitions. Their wall time, ``run_s``,
-#: and the per-operation latencies go to the detail record instead: on a
-#: shared 4-core host, slow spells lasting minutes stretch wall time by up
-#: to 2x and CPU time by much less (one lake run: +48% wall, +17% CPU).
-#: With 11 or 12 operations of 6 to 11 kinds a run, latency percentiles
-#: are order statistics that jump between operation kinds. Peak memory is a
-#: per-layer metric: the JVM's resident peak moves by a fifth between
-#: runs of the same work with the timing of garbage collection.
-END_TO_END = {"setup_s": "s", "run_cpu_s": "s"}
+#: end-to-end metrics of an untraced run: name -> unit. ``run_s`` is
+#: the wall time of the timed operations and ``run_cpu_s`` their CPU time
+#: (this process, the JVM and its Python workers), each a median over
+#: repetitions. ``run_s`` sees a change that waits (less parallelism,
+#: round trips, I/O); ``run_cpu_s`` is steadier on a shared host, where
+#: slow spells stretch wall time more than CPU time (one lake run: +48%
+#: wall, +17% CPU); a run's ``steal_share`` and loadavg in the detail
+#: record flag such spells. The per-operation latencies go to the detail
+#: record: with 11 to 16 operations of 8 to 11 kinds a run, latency
+#: percentiles are order statistics that jump between operation kinds.
+#: Peak memory is a per-layer metric: the JVM's resident peak moves by a
+#: fifth between runs of the same work with the timing of garbage
+#: collection.
+END_TO_END = {"setup_s": "s", "run_s": "s", "run_cpu_s": "s"}
 
 
 def parse_args(argv=None):
@@ -105,11 +109,14 @@ def start_session(work: str, cpus: int):
             # C1 only: a run is one cold, minute-long JVM, in which C2
             # compiles cost about half the CPU time and a quarter of the
             # wall time without paying back (69.8 s vs 53.4 s wall for one
-            # lake run on a 4-core host). No perf-data file: it would land
-            # in /tmp whatever java.io.tmpdir says.
+            # lake run on a 4-core host). C1 alone gets a 48 MiB code
+            # cache, which a pass of the 26 bench.py rows fills, after
+            # which the JVM stops compiling. No perf-data file: it would
+            # land in /tmp whatever java.io.tmpdir says.
             "spark.driver.extraJavaOptions":
                 f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp} "
-                "-XX:TieredStopAtLevel=1 -XX:-UsePerfData",
+                "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=256m "
+                "-XX:-UsePerfData",
             "spark.ui.showConsoleProgress": "false",
         })
     spark.sparkContext.setLogLevel("ERROR")
@@ -181,15 +188,26 @@ PER_LAYER = {
 }
 
 
-def layer_metrics(tracer, wl, cpus: int, run_s: float, session_s: float,
-                  peak_rss_mb: float, ops) -> dict[str, float]:
-    """The PER_LAYER values of a traced run. Times are self times summed
-    over the run; a layer the workload never calls reads 0."""
+def layer_metrics(tracer, wl, cpus: int, reps_run_s: list[float],
+                  session_s: float, peak_rss_mb: float, ops) -> dict[str, float]:
+    """The PER_LAYER values of a traced run. Times are self times. Times
+    and counts are summed over the run's repetitions and divided by their
+    number, so that each covers one repetition, as ``trace.run_s`` (the
+    mean wall time of a repetition) does; a layer the workload never
+    calls reads 0."""
+    reps = len(reps_run_s)
+    run_s = sum(reps_run_s) / reps
     st = tracer.self_times()
     c = tracer.counts
 
+    def self_s(name: str) -> float:
+        return st.get(name, 0.0) / reps
+
+    def count(name: str) -> float:
+        return c[name] / reps
+
     def spans_sum(field: str, *names: str) -> float:
-        return tracer.counter_sum(field, names or None)
+        return tracer.counter_sum(field, names or None) / reps
 
     def ratio(num: str, den: str) -> float:
         return c[num] / c[den] if c[den] else 0.0
@@ -199,13 +217,13 @@ def layer_metrics(tracer, wl, cpus: int, run_s: float, session_s: float,
     return {
         "session.start_s": session_s,
         "mem.peak_rss_mb": peak_rss_mb,
-        "queries.build_s": st.get("queries.build", 0.0),
+        "queries.build_s": self_s("queries.build"),
         "queries.py4j_calls": spans_sum("py4j_calls", "queries.build"),
         "queries.build_jobs": spans_sum("jobs", "queries.build"),
-        "catalyst.analysis_s": c["catalyst.analysis_s"],
-        "catalyst.optimization_s": c["catalyst.optimization_s"],
-        "catalyst.planning_s": c["catalyst.planning_s"],
-        "exec.collect_s": st.get("exec.collect", 0.0),
+        "catalyst.analysis_s": count("catalyst.analysis_s"),
+        "catalyst.optimization_s": count("catalyst.optimization_s"),
+        "catalyst.planning_s": count("catalyst.planning_s"),
+        "exec.collect_s": self_s("exec.collect"),
         "exec.jobs": spans_sum("jobs"),
         "exec.tasks": spans_sum("tasks"),
         "exec.task_run_s": task_run_s,
@@ -214,31 +232,31 @@ def layer_metrics(tracer, wl, cpus: int, run_s: float, session_s: float,
         "exec.shuffle_write_mb": spans_sum("shuffle_write_bytes") / 2**20,
         "exec.spill_mb": spans_sum("spill_bytes") / 2**20,
         "exec.core_util": task_run_s / (run_s * cpus),
-        "writer.write_s": st.get("writer.write", 0.0),
-        "writer.upsert_s": st.get("writer.upsert", 0.0),
-        "writer.files_added": c["writer.files_added"],
-        "writer.mb_added": c["writer.mb_added"],
+        "writer.write_s": self_s("writer.write"),
+        "writer.upsert_s": self_s("writer.upsert"),
+        "writer.files_added": count("writer.files_added"),
+        "writer.mb_added": count("writer.mb_added"),
         "writer.rows_landed_ratio": ratio("writer.rows_landed", "writer.rows_offered"),
-        "reader.load_s": st.get("reader.load", 0.0),
-        "reader.files_listed": c["reader.files_listed"],
-        "catalog.load_s": st.get("catalog.load", 0.0),
-        "catalog.sql_s": st.get("catalog.sql", 0.0),
-        "timefly.snapshot_s": st.get("timefly.snapshot", 0.0),
-        "timefly.read_s": st.get("timefly.read", 0.0),
-        "maintain.compact_s": st.get("maintain.compact", 0.0),
-        "maintain.files_before": c["maintain.files_before"],
-        "maintain.files_after": c["maintain.files_after"],
-        "maintain.mb_rewritten": c["maintain.mb_rewritten"],
-        "sweeps.neardup_s": st.get("sweeps.neardup", 0.0),
-        "sweeps.decontaminate_s": st.get("sweeps.decontaminate", 0.0),
+        "reader.load_s": self_s("reader.load"),
+        "reader.files_listed": count("reader.files_listed"),
+        "catalog.load_s": self_s("catalog.load"),
+        "catalog.sql_s": self_s("catalog.sql"),
+        "timefly.snapshot_s": self_s("timefly.snapshot"),
+        "timefly.read_s": self_s("timefly.read"),
+        "maintain.compact_s": self_s("maintain.compact"),
+        "maintain.files_before": count("maintain.files_before"),
+        "maintain.files_after": count("maintain.files_after"),
+        "maintain.mb_rewritten": count("maintain.mb_rewritten"),
+        "sweeps.neardup_s": self_s("sweeps.neardup"),
+        "sweeps.decontaminate_s": self_s("sweeps.decontaminate"),
         "sweeps.reuse_ratio": ratio("sweeps.datasets_reused", "sweeps.datasets_swept"),
-        "sweeps.sidecars_materialized": c["sweeps.sidecars_materialized"],
-        "sweeps.dataset_errors": c["sweeps.dataset_errors"],
+        "sweeps.sidecars_materialized": count("sweeps.sidecars_materialized"),
+        "sweeps.dataset_errors": count("sweeps.dataset_errors"),
         "lake.write_amp": write_amp,
         "lake.space_amp": space_amp,
         "run.error_rate": sum(not o.ok for o in ops) / len(ops),
         "trace.run_s": run_s,
-        "trace.overhead_s": tracer.own_s,
+        "trace.overhead_s": tracer.own_s / reps,
         "trace.coverage_min": min(tracer.coverage()),
     }
 
@@ -329,8 +347,8 @@ def measure(args, base: str, work: str) -> int:
         "failures": failures[:20],
     }
     if args.trace:
-        metrics = layer_metrics(tracer, wl, cpus, run_s, session_s,
-                                peak_rss_mb, all_ops)
+        metrics = layer_metrics(tracer, wl, cpus, [r for r, _ in reps],
+                                session_s, peak_rss_mb, all_ops)
         units = PER_LAYER
         tracer.dump(os.path.join(
             base, f"spans-{args.workload}-s{args.seed}.json"))
@@ -338,7 +356,7 @@ def measure(args, base: str, work: str) -> int:
             print("perfbench: spans cover less than 90% of an operation",
                   file=sys.stderr)
     else:
-        metrics = {"setup_s": setup_s, "run_cpu_s": run_cpu_s}
+        metrics = {"setup_s": setup_s, "run_s": run_s, "run_cpu_s": run_cpu_s}
         units = END_TO_END
     with open(os.path.join(base, f"detail-{args.workload}-s{args.seed}.json"),
               "w") as f:

@@ -19,19 +19,23 @@ from collections import defaultdict
 from py4j.protocol import Py4JJavaError
 
 
-def tail_percentile(values: list[float], beyond: int = 10) -> tuple[float, str, int]:
-    """The highest percentile of ``values`` that still has ``beyond``
-    samples above it: the (n - beyond)-th smallest value, labelled
-    ``p<floor(100 * (n - beyond) / n)>``. Returns (value, label, n).
-    With ``beyond`` or fewer samples there is no such percentile and
-    the maximum is returned, labelled ``p100``."""
+#: samples a tail percentile must leave above it
+TAIL_BEYOND = 10
+
+
+def tail_percentile(values: list[float]) -> tuple[float, str, int]:
+    """The highest percentile of ``values`` that still has
+    ``TAIL_BEYOND`` samples above it: the (n - TAIL_BEYOND)-th smallest
+    value, labelled ``p<floor(100 * (n - TAIL_BEYOND) / n)>``. Returns
+    (value, label, n). With ``TAIL_BEYOND`` or fewer samples there is no
+    such percentile and the maximum is returned, labelled ``p100``."""
     xs = sorted(values)
     n = len(xs)
     if n == 0:
         raise ValueError("no samples")
-    if n <= beyond:
+    if n <= TAIL_BEYOND:
         return xs[-1], "p100", n
-    k = n - beyond  # 1-based rank; exactly `beyond` samples rank above it
+    k = n - TAIL_BEYOND  # 1-based rank; exactly TAIL_BEYOND samples rank above it
     return xs[k - 1], f"p{(100 * k) // n}", n
 
 

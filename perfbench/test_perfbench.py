@@ -5,12 +5,20 @@
 
 from __future__ import annotations
 
+import importlib.util
+import json
+import os
+
 import pandas as pd
 import pytest
 
 import digests
 import gen
-from spans import median, tail_percentile
+import workloads
+from spans import Tracer, median, tail_percentile
+from workloads import Op
+
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def test_star_tables_are_a_pure_function_of_the_seed():
@@ -22,44 +30,46 @@ def test_star_tables_are_a_pure_function_of_the_seed():
 
 
 def test_ingest_plan_is_a_pure_function_of_the_seed():
-    a, b, c = (gen.ingest_plan(s, 3) for s in (5, 5, 6))
-    assert all(x.equals(y) for x, y in zip(a["batches"], b["batches"]))
-    assert all(x.equals(y) for x, y in zip(a["updates"][1:], b["updates"][1:]))
-    assert a["survivors"].equals(b["survivors"])
+    a, b, c = (gen.ingest_plan(s) for s in (5, 5, 6))
+    for key in ("initial", "batch", "updates", "survivors"):
+        assert a[key].equals(b[key])
     assert a["expected"] == b["expected"]
     assert a["expected"] != c["expected"]
 
 
 def test_ingest_plan_invariants_follow_the_batches():
-    plan = gen.ingest_plan(3, 4, events_per_night=50)
-    for n, batch in enumerate(plan["batches"]):
-        ids = batch.column("event_id").to_pylist()
-        assert len(ids) == len(set(ids))  # replays come from earlier nights
-        assert plan["expected"][n]["events"] == 50 * (n + 1)
-        assert n == 0 or min(ids) < 50 * n  # night n > 0 replays old rows
-        upd = plan["updates"][n]
-        assert (upd is None) == (n == 0)
-        assert upd is None or max(upd.column("event_id").to_pylist()) < 50 * n
+    plan = gen.ingest_plan(3)
+    n = gen.EVENTS_PER_NIGHT
+    ids = plan["batch"].column("event_id").to_pylist()
+    assert len(ids) == len(set(ids))
+    assert sum(i < n for i in ids) == round(gen.REPLAY_SHARE * n)  # replays
+    assert max(plan["updates"].column("event_id").to_pylist()) < n
+    assert plan["expected"]["events"] == 2 * n
     final = plan["survivors"]
-    assert final.num_rows == plan["expected"][-1]["events"]
+    assert final.column("event_id").to_pylist() == list(range(2 * n))
     assert sum(round(v * 100) for v in final.column("value").to_pylist()) == \
-        plan["expected"][-1]["value_cents"]
+        plan["expected"]["value_cents"]
+    # the corrected values replace the night-0 ones
+    upd = dict(zip(plan["updates"].column("event_id").to_pylist(),
+                   plan["updates"].column("value").to_pylist()))
+    assert all(final.column("value")[i].as_py() == v for i, v in upd.items())
 
 
 def test_sweep_plan_is_a_pure_function_of_the_seed():
-    a, b, c = (gen.sweep_plan(s, 2) for s in (9, 9, 10))
+    a, b, c = (gen.sweep_plan(s) for s in (9, 9, 10))
     assert all(a["initial"][d].equals(b["initial"][d]) for d in a["dumps"])
+    assert a["appends"].keys() == b["appends"].keys()
+    assert all(a["appends"][d].equals(b["appends"][d]) for d in a["appends"])
     assert a["planted_dups"] == b["planted_dups"]
     assert a["planted_contam"] == b["planted_contam"]
     assert a["planted_dups"] != c["planted_dups"]
 
 
 def test_sweep_plan_plants_copies_across_dumps():
-    plan = gen.sweep_plan(1, 2)
+    plan = gen.sweep_plan(1)
     assert plan["planted_dups"] and plan["planted_contam"]
     assert all(copy[0] != src[0] for copy, src in plan["planted_dups"].items())
-    for n, batch in enumerate(plan["appends"]):
-        assert 0 < len(batch) < len(plan["dumps"])  # some dumps stay unchanged
+    assert len(plan["appends"]) == 1  # the other dump stays unchanged
 
 
 @pytest.mark.parametrize("n, rank, label", [
@@ -102,26 +112,65 @@ def test_digest_sees_values_names_and_float_bits():
 def test_committed_digests_match_the_oracle(tmp_path):
     gen.write_tables(gen.star_tables(gen.QUERY_MIX_DATA_SEED,
                                      digests.QUERY_MIX_SCALE), str(tmp_path))
-    names = digests.query_names()
-    assert len(names) == 26
-    assert digests.oracle_digests(str(tmp_path), names) == digests.load_expected()
+    assert digests.oracle_digests(str(tmp_path), digests.QUERY_MIX) == \
+        digests.load_expected()
+
+
+def _load_run():
+    """run.py, imported under another name than the test helpers'."""
+    spec = importlib.util.spec_from_file_location("perfbench_run",
+                                                  os.path.join(HERE, "run.py"))
+    run = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run)
+    return run
+
+
+class _NoLake:
+    def amplification(self):
+        return 0.0, 0.0
+
+
+def _traced_rep(tracer, t0):
+    """One two-second query repetition: a 0.5 s build that runs one job
+    with 4 s of task time, then a 1.5 s collect."""
+    op = tracer.new_op()
+    root = len(tracer.spans)
+    tracer.spans += [
+        {"name": "query", "id": root, "parent": None, "op": op,
+         "start": t0, "end": t0 + 2.0, "counters": {}},
+        {"name": "queries.build", "id": root + 1, "parent": root, "op": op,
+         "start": t0, "end": t0 + 0.5,
+         "counters": {"jobs": 1, "task_run_ms": 4000, "py4j_calls": 30}},
+        {"name": "exec.collect", "id": root + 2, "parent": root, "op": op,
+         "start": t0 + 0.5, "end": t0 + 2.0, "counters": {}},
+    ]
+    tracer.counts["catalyst.planning_s"] += 0.1
+    return Op("query", seconds=2.0)
+
+
+@pytest.mark.parametrize("reps", [1, 2, 3])
+def test_layer_metrics_cover_one_repetition(reps):
+    run = _load_run()
+    tracer = Tracer(None, enabled=False)
+    ops = [_traced_rep(tracer, 10.0 * i) for i in range(reps)]
+    m = run.layer_metrics(tracer, _NoLake(), 4, [2.0] * reps, 5.0, 100.0, ops)
+    assert m["trace.run_s"] == 2.0
+    assert m["queries.build_s"] == 0.5
+    assert m["exec.collect_s"] == 1.5
+    assert m["queries.build_jobs"] == 1
+    assert m["queries.py4j_calls"] == 30
+    assert m["exec.task_run_s"] == 4.0
+    assert m["exec.core_util"] == 0.5  # 4 s of tasks in 2 s on 4 cores
+    assert m["catalyst.planning_s"] == pytest.approx(0.1)
+    assert m["trace.coverage_min"] == 1.0
+    assert m["run.error_rate"] == 0.0
 
 
 def test_benchmark_json_lists_what_the_runner_reports():
-    import importlib.util
-    import json
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    spec = importlib.util.spec_from_file_location("perfbench_run",
-                                                  os.path.join(here, "run.py"))
-    run = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(run)
-    with open(os.path.join(os.path.dirname(here), "BENCHMARK.json")) as f:
+    run = _load_run()
+    with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
         bm = json.load(f)
     assert {m["name"]: m["unit"] for m in bm["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in bm["per_layer"]} == run.PER_LAYER
-    import workloads
-
     assert [w["name"] for w in bm["workloads"]] == list(run.WORKLOADS)
     assert list(workloads.WORKLOADS) == list(run.WORKLOADS)

@@ -181,7 +181,7 @@ class QueryMix:
 
         spark, ops = self.ctx.spark, []
         for name in self.names:
-            with Timed(tracer, ops, "query") as op:
+            with Timed(tracer, ops, name) as op:
                 with tracer.span("queries.build"):
                     df = QUERIES[name](spark, self.data)
                 with tracer.span("exec.collect"):
@@ -208,34 +208,34 @@ FROM events
 
 
 class Lake:
-    """A seeded nightly lake under one ``Datalake`` root, holding
+    """A seeded two-night lake under one ``Datalake`` root, holding
     ``events`` (TimeFly-managed, partitioned by ``event_type``) and
-    ``documents`` split into crawl dumps written through ``Writer(signatures=["minhash",
-    "winnowing"])``, with planted cross-dump copies and planted copies of
-    a held-out eval set.
+    ``documents`` split into crawl dumps written through
+    ``Writer(signatures=["minhash", "winnowing"])``, with planted
+    cross-dump copies and planted copies of a held-out eval set.
 
-    Night 0 (the untimed warm-up) creates every dataset and takes a
-    first snapshot. Each timed night then runs, as separate operations:
-    a delta write of the day's events (with replayed rows), an upsert of
-    late corrections to earlier events, appends to a seeded subset of the dumps,
-    ``Datalake.load`` and a read-your-writes aggregate through
-    ``Datalake.sql``, a ``Dataset`` count, ``neardup_dedup`` and
+    Night 0 (the untimed warm-up) creates every dataset, takes a first
+    snapshot and runs both sweeps once. Night 1 is the timed repetition. It runs, as separate
+    operations: a delta write of the day's events (with replayed rows),
+    an upsert of late corrections to night-0 events, an append to one
+    seeded dump, ``Datalake.load`` and a read-your-writes aggregate
+    through ``Datalake.sql``, a ``Dataset`` count, ``neardup_dedup`` and
     ``decontaminate`` (incremental, default ``max_concurrency``), a
-    copy-mode snapshot with a time-travel read of the previous one, and,
-    on the last night, compaction of ``events``, the dataset the nightly
-    delta writes fill with small files. With one timed night both
-    sweeps make their first, full pass: a night that reuses verdicts
-    would need an untimed sweep night first, which the time budget of a
-    run does not hold. One repetition is the whole history on a fresh
-    lake root."""
+    copy-mode snapshot with a time-travel read of night 0's, and
+    compaction of ``events``, the dataset the delta writes fill with
+    small files. Night 1's sweeps reuse night 0's work for the dump that
+    got no appends: ``decontaminate`` reports it fresh and skips it, and
+    ``neardup_dedup`` re-pairs only the LSH buckets the appended
+    documents touch. A further repetition replays both nights on a
+    fresh lake root."""
 
-    NIGHTS, REPS = 1, 1
+    REPS = 1
     SIGNATURES = ["minhash", "winnowing"]
 
     def __init__(self, ctx):
         self.ctx = ctx
-        self.ingest = gen.ingest_plan(ctx.seed, self.NIGHTS)
-        self.sweep = gen.sweep_plan(ctx.seed, self.NIGHTS)
+        self.ingest = gen.ingest_plan(ctx.seed)
+        self.sweep = gen.sweep_plan(ctx.seed)
         self.inbox = os.path.join(ctx.work, "inbox")
         self.reps = 0
         self.offered = self.survivors = 0
@@ -247,14 +247,11 @@ class Lake:
 
     def stage(self) -> None:
         ing, sw = self.ingest, self.sweep
-        self.offered = 0
-        for n, batch in enumerate(ing["batches"]):
-            self.offered += write_inbox(batch, self._in(f"events{n}"))
-            if ing["updates"][n] is not None:
-                self.offered += write_inbox(ing["updates"][n], self._in(f"updates{n}"))
-        dumps = [sw["initial"], *sw["appends"]]
+        self.offered = sum(write_inbox(ing[k], self._in(k))
+                           for k in ("initial", "batch", "updates"))
         docs = sum(write_inbox(t, self._in(f"{d}_{n}"))
-                   for n, batch in enumerate(dumps) for d, t in batch.items())
+                   for n, batch in enumerate((sw["initial"], sw["appends"]))
+                   for d, t in batch.items())
         self.offered += docs
         write_inbox(sw["eval_set"], self._in("eval"))
         # every document survives (append-only); events survive as their
@@ -277,7 +274,7 @@ class Lake:
         self.events = os.path.join(self.root, "events")
         self.events_cur = os.path.join(self.events, "current")
         Writer(spark, self.events_cur, partition_by="event_type").write(
-            self._in("events0"), mode="append")
+            self._in("initial"), mode="append")
         tf = TimeFly(spark, self.events)
         tf.new()
         tf.create_current()
@@ -288,7 +285,12 @@ class Lake:
                    signatures=self.SIGNATURES).write(self._in(f"{d}_0"),
                                                      mode="append")
             lake.add_dataset(d)
-        self.stamps = [(tf.add_snapshot(), self.ingest["expected"][0]["events"])]
+        self.stamp0 = tf.add_snapshot()
+        bench = self._bench()
+        self.night0 = {
+            "neardup": lake.neardup_dedup(incremental=True),
+            "decontaminate": lake.decontaminate(bench, incremental=True),
+        }
         self.written.update()
         return lake, tf
 
@@ -309,13 +311,15 @@ class Lake:
             F.xxhash64(*cols).cast("decimal(38,0)"))).first())
 
     def _sweep_entries(self, tracer: Tracer, op: Op, result: dict, layer: str) -> None:
-        """Count a sweep result's per-dump entries; an ``error`` entry
-        fails the operation."""
+        """Count a sweep result's per-dump entries. An ``error`` entry,
+        in it or in the same sweep's untimed night-0 result, fails the
+        operation."""
         for d in self.sweep["dumps"]:
             entry = result.get(d, {})
-            if "error" in entry:
-                op.fail(f"{layer} {d}: {entry['error']}"[:300])
-                tracer.add("sweeps.dataset_errors", 1)
+            for night, e in ((0, self.night0[layer].get(d, {})), (1, entry)):
+                if "error" in e:
+                    op.fail(f"{layer} night {night} {d}: {e['error']}"[:300])
+                    tracer.add("sweeps.dataset_errors", 1)
             tracer.add("sweeps.datasets_swept", 1)
             tracer.add("sweeps.datasets_reused", "fresh" in entry)
             tracer.add("sweeps.sidecars_materialized",
@@ -353,75 +357,71 @@ class Lake:
         lake, tf = self.ready or self._bootstrap()
         self.ready = None
         bench = self._bench()
-        for n in range(1, self.NIGHTS + 1):
-            want = self.ingest["expected"][n]
-            before = data_files(self.events_cur)
-            with self._timed(tracer, ops, "events.delta"):
+        want = self.ingest["expected"]
+        before = data_files(self.events_cur)
+        with self._timed(tracer, ops, "events.delta"):
+            with tracer.span("writer.write"):
+                Writer(spark, self.events_cur, partition_by="event_type").write(
+                    self._in("batch"), mode="delta", delta_subset=["event_id"])
+        if tracer.enabled:
+            new = set(data_files(self.events_cur)) - set(before)
+            tracer.add("writer.files_added", len(new))
+            tracer.add("writer.mb_added",
+                       sum(os.path.getsize(p) for p in new) / 2**20)
+            tracer.add("writer.rows_landed", parquet_rows(new))
+            tracer.add("writer.rows_offered", self.ingest["batch"].num_rows)
+        with self._timed(tracer, ops, "events.upsert"):
+            with tracer.span("writer.upsert"):
+                Writer(spark, self.events_cur, partition_by="event_type").write(
+                    self._in("updates"), mode="upsert", delta_subset=["event_id"])
+        for d in self.sweep["appends"]:
+            with self._timed(tracer, ops, "dump.append"):
                 with tracer.span("writer.write"):
-                    Writer(spark, self.events_cur, partition_by="event_type").write(
-                        self._in(f"events{n}"), mode="delta",
-                        delta_subset=["event_id"])
-            if tracer.enabled:
-                new = set(data_files(self.events_cur)) - set(before)
-                tracer.add("writer.files_added", len(new))
-                tracer.add("writer.mb_added",
-                           sum(os.path.getsize(p) for p in new) / 2**20)
-                tracer.add("writer.rows_landed", parquet_rows(new))
-                tracer.add("writer.rows_offered",
-                           self.ingest["batches"][n].num_rows)
-            with self._timed(tracer, ops, "events.upsert"):
-                with tracer.span("writer.upsert"):
-                    Writer(spark, self.events_cur, partition_by="event_type").write(
-                        self._in(f"updates{n}"), mode="upsert",
-                        delta_subset=["event_id"])
-            for d in self.sweep["appends"][n - 1]:
-                with self._timed(tracer, ops, "dump.append"):
-                    with tracer.span("writer.write"):
-                        Writer(spark, os.path.join(self.root, d),
-                               signatures=self.SIGNATURES).write(
-                            self._in(f"{d}_{n}"), mode="append")
-            with self._timed(tracer, ops, "lake.load"):
-                with tracer.span("catalog.load"):
-                    lake.load()
-            with self._timed(tracer, ops, "lake.sql") as op:
-                with tracer.span("catalog.sql"):
-                    df = lake.sql(AGG_SQL)
-                with tracer.span("exec.collect"):
-                    row = df.first()
-            if op.ok:
-                got = (row.n_rows, row.n_ids, row.value_cents)
-                exp = (want["events"], want["events"], want["value_cents"])
-                if got != exp:
-                    op.fail(f"night {n}: aggregate {got} != expected {exp}")
-            if tracer.enabled:
-                tracer.add("reader.files_listed", len(data_files(self.events_cur)))
-            with self._timed(tracer, ops, "dataset.load") as op:
-                with tracer.span("reader.load"):
-                    df = Dataset(spark, self.events_cur).load()
-                with tracer.span("exec.collect"):
-                    count = df.count()
-            if op.ok and count != want["events"]:
-                op.fail(f"night {n}: {count} events, expected {want['events']}")
-            neardup = decon = {}
-            with self._timed(tracer, ops, "sweep.neardup") as nd_op:
-                with tracer.span("sweeps.neardup"):
-                    neardup = lake.neardup_dedup(incremental=True)
-            self._sweep_entries(tracer, nd_op, neardup, "neardup")
-            with self._timed(tracer, ops, "sweep.decontaminate") as dc_op:
-                with tracer.span("sweeps.decontaminate"):
-                    decon = lake.decontaminate(bench, incremental=True)
-            self._sweep_entries(tracer, dc_op, decon, "decontaminate")
-            with self._timed(tracer, ops, "timefly.snapshot"):
-                with tracer.span("timefly.snapshot"):
-                    self.stamps.append((tf.add_snapshot(), want["events"]))
-            stamp, at = self.stamps[-2]
-            with self._timed(tracer, ops, "timefly.read") as op:
-                with tracer.span("timefly.read"):
-                    df = tf.read(stamp)
-                with tracer.span("exec.collect"):
-                    count = df.count()
-            if op.ok and count != at:
-                op.fail(f"snapshot {stamp}: {count} rows, expected {at}")
+                    Writer(spark, os.path.join(self.root, d),
+                           signatures=self.SIGNATURES).write(
+                        self._in(f"{d}_1"), mode="append")
+        with self._timed(tracer, ops, "lake.load"):
+            with tracer.span("catalog.load"):
+                lake.load()
+        with self._timed(tracer, ops, "lake.sql") as op:
+            with tracer.span("catalog.sql"):
+                df = lake.sql(AGG_SQL)
+            with tracer.span("exec.collect"):
+                row = df.first()
+        if op.ok:
+            got = (row.n_rows, row.n_ids, row.value_cents)
+            exp = (want["events"], want["events"], want["value_cents"])
+            if got != exp:
+                op.fail(f"aggregate {got} != expected {exp}")
+        if tracer.enabled:
+            tracer.add("reader.files_listed", len(data_files(self.events_cur)))
+        with self._timed(tracer, ops, "dataset.load") as op:
+            with tracer.span("reader.load"):
+                df = Dataset(spark, self.events_cur).load()
+            with tracer.span("exec.collect"):
+                count = df.count()
+        if op.ok and count != want["events"]:
+            op.fail(f"{count} events, expected {want['events']}")
+        neardup = decon = {}
+        with self._timed(tracer, ops, "sweep.neardup") as nd_op:
+            with tracer.span("sweeps.neardup"):
+                neardup = lake.neardup_dedup(incremental=True)
+        self._sweep_entries(tracer, nd_op, neardup, "neardup")
+        with self._timed(tracer, ops, "sweep.decontaminate") as dc_op:
+            with tracer.span("sweeps.decontaminate"):
+                decon = lake.decontaminate(bench, incremental=True)
+        self._sweep_entries(tracer, dc_op, decon, "decontaminate")
+        with self._timed(tracer, ops, "timefly.snapshot"):
+            with tracer.span("timefly.snapshot"):
+                tf.add_snapshot()
+        with self._timed(tracer, ops, "timefly.read") as op:
+            with tracer.span("timefly.read"):
+                df = tf.read(self.stamp0)
+            with tracer.span("exec.collect"):
+                count = df.count()
+        at = self.ingest["initial"].num_rows
+        if op.ok and count != at:
+            op.fail(f"snapshot {self.stamp0}: {count} rows, expected {at}")
         self._check_recall(nd_op, dc_op, neardup, decon)
         pre = self._content(self.events_cur)
         before = data_files(self.events_cur)
